@@ -3446,6 +3446,7 @@ def entry(spark: SparkSession) -> DataFrame:
     2024 (the reference's §3.1 pipeline, Spark-first).
     """
     from graphouse_spark.plans.metricdata import metric_series
+    from graphouse_spark.queryparams import MetricDataQueryParams
 
     sf_dir = "/root/testdata/sf0.001"
     ev = _events_sec(spark, sf_dir)
@@ -3477,9 +3478,8 @@ def entry(spark: SparkSession) -> DataFrame:
         F.col("event_id").alias("updated"),
     )
     metric_names = [r["metric"] for r in data.select("metric").distinct().collect()]
-    return metric_series(
-        spark, data, sorted(metric_names), SEC_JAN1, SEC_JAN1 + 31 * DAY, DAY, "avg"
-    )
+    params = MetricDataQueryParams(SEC_JAN1, SEC_JAN1 + 31 * DAY, DAY)
+    return metric_series(spark, data, [("avg", sorted(metric_names), params)])
 
 
 def q_gh_all_negative_universe(spark, sf_dir):

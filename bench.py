@@ -27,6 +27,8 @@ from graphouse_spark.session import get_spark
 #: host, so "cpu went up" across rounds means the plan, not the box.
 #: Re-pin only when the probes themselves change shape.
 REF_CALIB = {"numpy_cpu_sec": 0.6764, "jvm_cpu_sec": 7.7221}
+#: per-query detail file, relative to this script (git-ignored)
+DETAIL_PATH = "bench-out/BENCH_DETAIL.json"
 
 #: benchmark set: the flagship read path + the heaviest operators
 BENCH_QUERIES = [
@@ -384,14 +386,16 @@ def main() -> None:
     load_after = os.getloadavg()
 
     # Per-query executor task-time + shuffle/input/spill bytes and the
-    # per-query extended walls go to BENCH_DETAIL.json beside this
-    # script: the driver captures only a bounded tail of stdout, and
+    # per-query extended walls go to bench-out/BENCH_DETAIL.json beside
+    # this script (git-ignored, so a run leaves the checkout clean):
+    # a harness may keep only a bounded tail of stdout, and
     # round 6's artifact proved the full payload truncates mid-token
     # ("parsed": null). The ONE stdout line below stays compact enough
     # to survive a 2000-char tail capture; the detail file carries the
     # load-invariant numbers rounds are compared on.
     detail_path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                               "BENCH_DETAIL.json")
+                               DETAIL_PATH)
+    os.makedirs(os.path.dirname(detail_path), exist_ok=True)
     with open(detail_path, "w") as fh:
         json.dump({
             "calib": calib,
@@ -455,7 +459,7 @@ def main() -> None:
         "master": spark.sparkContext.master,
         "default_parallelism": spark.sparkContext.defaultParallelism,
         "shuffle_partitions": int(spark.conf.get("spark.sql.shuffle.partitions")),
-        "detail": "BENCH_DETAIL.json",
+        "detail": DETAIL_PATH,
         "sf": sf,
     }, separators=(",", ":")))
 

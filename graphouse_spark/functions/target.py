@@ -18,7 +18,7 @@ Grammar (the subset every dashboard uses):
     target  := call | path
     call    := NAME '(' arg (',' arg)* ')'
     arg     := target | NUMBER | STRING
-    path    := glob chars [A-Za-z0-9._*?{}[]!-]+
+    path    := glob chars [A-Za-z0-9._*?{}[]!-]+ ; a {a,b} group keeps its commas
 """
 
 from __future__ import annotations
@@ -38,7 +38,9 @@ _TOKEN = re.compile(
     r"|(?P<string>'[^']*'|\"[^\"]*\")"
     r"|(?P<number>-?\d+\.\d+|-?\d+)"
     r"|(?P<atom>[A-Za-z_][A-Za-z0-9_]*(?=\s*\())"  # function name (lookahead '(')
-    r"|(?P<path>[A-Za-z0-9._\-*?{}\[\]!]+))"
+    # a {..} brace group is one path piece, so its commas list
+    # alternatives instead of separating arguments
+    r"|(?P<path>(?:\{[^{}()\s]*\}|[A-Za-z0-9._\-*?{}\[\]!])+))"
 )
 
 

@@ -281,7 +281,10 @@ def stddev_series(series: DataFrame, ts_col: str = "ts",
                   value_col: str = "value") -> DataFrame:
     """graphite ``stddevSeries`` + ``averageSeries`` + ``countSeries`` in
     one aligned-point pass (sample stddev; null when only one series
-    contributes, matching SQL semantics on both engines).
+    contributes, matching SQL semantics on both engines). Like graphite,
+    the mean and stddev take only the non-null points at a timestamp
+    (a gap-filled null is no value, not a zero); ``n_series`` counts
+    every series.
 
     Engine-portable formulation: built-in ``stddev_samp`` accumulates
     floats in data order (Welford vs sum-of-squares differs across
@@ -293,7 +296,7 @@ def stddev_series(series: DataFrame, ts_col: str = "ts",
     micro = F.round(F.col(value_col) * 1_000_000).cast("decimal(38,0)")
     s1 = F.sum(micro).cast("double")
     s2 = F.sum(micro * micro).cast("double")
-    n = F.count(F.lit(1)).cast("double")
+    n = F.count(F.col(value_col)).cast("double")
     var = (s2 - s1 * s1 / n) / (n - 1)
     std = F.when(n > 1, F.sqrt(F.greatest(var, F.lit(0.0))) / 1_000_000.0)
     return (

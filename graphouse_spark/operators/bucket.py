@@ -6,11 +6,10 @@ Parity: ``<func>(value) GROUP BY metric, intDiv(toUInt32(ts), step)*step``
 width ``step`` (W1) but kept as integer arithmetic so the whole plan
 stays in whole-stage codegen.
 
-The per-metric aggregation *function* comes from retention rules; the
-reference issues one query per function group
-(MetricDataService.java:45-52). We support both that shape
-(:func:`bucket_aggregate` per group, union) and a single-pass variant
-(:func:`bucket_aggregate_multi`) where a ``function`` column drives
+The per-metric aggregation *function* comes from retention rules. The
+read path (``plans/metricdata.py``) writes its per-group aggregate in
+its own SQL statement; :func:`bucket_aggregate_multi` is the
+single-pass variant for rollup, where a ``function`` column drives
 conditional aggregation — one shuffle instead of N.
 """
 
@@ -36,23 +35,6 @@ AGG_FUNCTIONS = {
 def bucket_ts(ts: Column, step: int) -> Column:
     """Epoch-aligned tumbling bucket: ``ts div step * step``."""
     return (ts.cast("long") - (ts.cast("long") % F.lit(step))).alias("ts")
-
-
-def bucket_aggregate(points: DataFrame, step: int, function: str = "avg",
-                     metric_col: str = "metric", ts_col: str = "timestamp",
-                     value_col: str = "value") -> DataFrame:
-    """Aggregate deduped points into step-aligned buckets per metric.
-
-    Returns (metric, ts, value) with ts = bucket start.
-    """
-    try:
-        agg = AGG_FUNCTIONS[function]
-    except KeyError:
-        raise ValueError(f"unknown retention function {function!r}") from None
-    return (
-        points.groupBy(F.col(metric_col).alias("metric"), bucket_ts(F.col(ts_col), step))
-        .agg(agg(value_col).alias("value"))
-    )
 
 
 def bucket_aggregate_multi(points: DataFrame, step: int, function_col: str = "function",

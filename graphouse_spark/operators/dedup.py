@@ -8,10 +8,8 @@ Parity:
 
 Scale notes: a single hash-aggregate shuffle on the group keys;
 Catalyst plans partial (map-side) + final aggregation automatically,
-so duplicate-heavy partitions shrink before the shuffle. When the
-dedup feeds a bucket aggregation, chain the two groupBys in one plan
-(A6) — the bucket agg reuses the shuffle's clustering where possible
-and AQE coalesces small post-shuffle partitions.
+so duplicate-heavy partitions shrink before the shuffle. The series
+read writes its own LWW into one SQL statement (plans/metricdata.py).
 """
 
 from __future__ import annotations

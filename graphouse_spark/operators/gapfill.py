@@ -1,58 +1,14 @@
-"""Gap filling: one point per step in [start, end), missing -> null.
+"""CH ``ORDER BY col WITH FILL`` for the /query admin surface.
 
-Parity: MetricDataRowCallbackHandler.java:37-105 and its golden tests
-— every requested metric (even with zero data rows) gets a full
-series; NaN values become nulls; buckets outside [start, end) are
-clipped.
-
-Spark-first shape: build the (metric x bucket) grid declaratively with
-``sequence()`` + ``explode`` and left-join the aggregated points on
-(metric, ts). Both sides hash-partition on the same keys — one
-shuffle, no driver loop, scales to any number of metrics. The grid is
-generated, not scanned, so it costs no IO.
+The /metricData and /render series gap fill is not here: it is part of
+the one read statement in ``plans/metricdata.py``, where grid rows join
+the bucket aggregation instead of a join.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import LongType, StructField, StructType
-
-
-def time_grid(spark: SparkSession, metrics: list[str] | DataFrame, start: int, end: int, step: int) -> DataFrame:
-    """DataFrame (metric, ts) with ts = start, start+step, ... < end."""
-    if isinstance(metrics, DataFrame):
-        names = metrics.select(F.col(metrics.columns[0]).alias("metric"))
-    else:
-        names = None
-    seq = F.sequence(F.lit(start).cast("long"), F.lit(end - step).cast("long"), F.lit(step).cast("long"))
-    if names is None:
-        spark_names = spark.createDataFrame([(m,) for m in metrics], "metric string")
-        names = spark_names
-    if end - step < start:  # empty range
-        return names.select("metric", F.lit(None).cast("long").alias("ts")).filter(F.lit(False))
-    return names.select("metric", F.explode(seq).alias("ts"))
-
-
-def gap_fill(points: DataFrame, grid: DataFrame) -> DataFrame:
-    """Left-join points onto the grid; non-finite values -> null.
-
-    ``points``: (metric, ts, value) bucket-aggregated rows.
-    Returns (metric, ts, value) with exactly one row per grid cell.
-    """
-    value = F.when(F.isnan(F.col("value")), F.lit(None).cast("double")).otherwise(F.col("value"))
-    return (
-        grid.join(points, ["metric", "ts"], "left")
-        .select("metric", "ts", value.alias("value"))
-    )
-
-
-def gap_filled_series(spark: SparkSession, points: DataFrame, metrics: list[str],
-                      start: int, end: int, step: int) -> DataFrame:
-    """Full gap-filled, clipped series for the requested metric list."""
-    clipped = points.filter((F.col("ts") >= start) & (F.col("ts") < end))
-    grid = time_grid(spark, metrics, start, end, step)
-    return gap_fill(clipped, grid)
 
 
 # ---------------------------------------------------------------------------
@@ -70,9 +26,8 @@ def gap_filled_series(spark: SparkSession, points: DataFrame, metrics: list[str]
 # Paths:
 # - ``stepped_fill_rows``: the driver loop — O(filled) python, right
 #   for the common small interactive result;
-# - ``stepped_fill_frame``: sequence()+explode on executors (the same
-#   generated-grid shape as time_grid above) — right when the fill
-#   EXPANSION is large (sparse result over a wide FROM/TO range),
+# - ``stepped_fill_frame``: sequence()+explode on executors — right
+#   when the fill EXPANSION is large (sparse result over a wide FROM/TO range),
 #   where a driver loop would grind; the lead/row_number window runs
 #   over the already-bounded result (<= max_rows), the expansion is
 #   repartitioned before explode so it parallelizes.

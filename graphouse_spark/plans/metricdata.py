@@ -1,100 +1,154 @@
-"""The /metricData read path — the engine's flagship query plan.
+"""The /metricData and /render series read — the flagship query plan.
 
 Parity: MetricDataService.java:45-98 + MetricDataRowCallbackHandler
 golden JSON. Pipeline (SURVEY §3.1):
 
     glob expansion (tree)            -> metric name list
-    group metrics by retention func  -> one pipeline per function
-    per group:
-      F1 IN-list ∧ F2 ts-range ∧ F3 date partition prune
-      A1 LWW dedup (max_by(value, updated) per metric, timestamp)
-      A2 bucket agg  (<func> per metric, floor(ts/step)*step)
-      W3 grid left-join gap fill
-    unionByName across groups -> JSON {metric: {start, end, step, points}}
+    group metrics by retention func  -> one (function, names, params)
+                                        group each
+    ONE spark.sql statement, one UNION ALL branch per group:
+      F1 IN-list ∧ F2 ts-range ∧ F3 date partition prune (the scan)
+      UNION ALL the gap-fill grid: one (metric, bucket start, NULL,
+        NULL) row per requested name x step, generated by explode
+      REPARTITION(metric, bucket) — the branch's only exchange
+      A1 LWW dedup  max_by(value, updated) GROUP BY metric, bucket, ts
+      A2 bucket agg <func>(value) GROUP BY metric, bucket, NaN -> NULL
+    one collect -> JSON {metric: {start, end, step, points}}
+
+How the grid replaces a join: a grid row carries a NULL ``updated``,
+which ``max_by`` never picks over a real point, and a NULL value,
+which every retention aggregate skips — so every bucket exists and a
+real point always wins, with no join and no second shuffle.
 
 Scale notes:
-- the metric IN-list filter is pushed to the Parquet scan (names are
-  literal strings), so with the (metric, timestamp)-sorted layout the
-  scan touches only matching row groups;
+- the names are bound parameters, so the IN-list reaches the Parquet
+  scan as a pushed ``In``/``EqualTo`` filter; with the (metric,
+  timestamp)-sorted layout the scan touches only matching row groups;
 - the redundant ``date`` predicate (F3) is derived from the ts range
   exactly like the reference adds it for ClickHouse partition pruning
   (MetricDataService.java:75) — here it prunes parquet partitions;
-- dedup+bucket are two chained aggregations on the same key prefix —
-  Catalyst plans partial/final pairs, AQE coalesces the output;
-- when the IN-list is huge, pass a DataFrame of names instead and the
-  filter becomes a broadcast semi-join (J2).
+- both aggregations group by a superset of the exchange keys, so they
+  run on its clustering; keying the exchange on (metric, bucket) and
+  not on metric alone keeps one long series spread over many tasks.
 """
 
 from __future__ import annotations
 
-import json
 import math
 from collections import defaultdict
-from typing import Iterable
+from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
-from graphouse_spark.operators.bucket import bucket_aggregate
-from graphouse_spark.operators.dedup import dedup_points
-from graphouse_spark.operators.gapfill import gap_filled_series
 from graphouse_spark.queryparams import MetricDataQueryParams
 from graphouse_spark.retention import CombinedRetentionProvider, DefaultRetentionProvider
 
+#: retention function -> SQL aggregate over the deduped value ``v``.
+#: Every one skips NULLs, so grid rows never change a bucket's value.
+_SQL_AGG = {
+    "avg": "avg(v)",
+    "min": "min(v)",
+    "max": "max(v)",
+    "sum": "sum(v)",
+    "any": "first(v, true)",
+    "last": "last(v, true)",
+    # graphite aggregate()/\*WithWildcards 'multiply' (SQL has no
+    # product aggregate; collect_list drops NULLs like the others)
+    "multiply": "IF(count(v) = 0, NULL, "
+                "aggregate(collect_list(v), 1D, (acc, x) -> acc * x))",
+}
 
-def filter_points(data: DataFrame, metric_names: "Iterable[str] | DataFrame",
-                  start: int, end: int) -> DataFrame:
-    """F1 ∧ F2 ∧ F3: names, half-open ts range, redundant date prune."""
-    cond = (
-        (F.col("timestamp") >= start)
-        & (F.col("timestamp") < end)
-        & (F.col("date") >= F.to_date(F.from_unixtime(F.lit(start))))
-        & (F.col("date") <= F.to_date(F.from_unixtime(F.lit(end))))
+#: one retention group: (function, metric names, snapped params)
+SeriesGroup = tuple[str, list[str], MetricDataQueryParams]
+
+_BRANCH = """
+SELECT metric, b AS ts, nanvl({agg}, CAST(NULL AS DOUBLE)) AS value FROM (
+  SELECT metric, b, max_by(value, updated) AS v FROM (
+    SELECT /*+ REPARTITION(metric, b) */ * FROM (
+      SELECT metric, timestamp - timestamp % {step}L AS b, timestamp, value, updated
+      FROM {{data}}
+      WHERE metric IN ({names}) AND timestamp >= {start}L AND timestamp < {stop}L
+        AND date >= to_date(from_unixtime({start}L))
+        AND date <= to_date(from_unixtime({stop}L))
+      UNION ALL
+      SELECT metric, b, b, CAST(NULL AS DOUBLE), CAST(NULL AS BIGINT)
+      FROM (SELECT explode(array({names})) AS metric)
+      LATERAL VIEW explode(sequence({start}L, {last}L, {step}L)) grid AS b
     )
-    filtered = data.filter(cond)
-    if isinstance(metric_names, DataFrame):
-        names = metric_names.select(F.col(metric_names.columns[0]).alias("metric"))
-        return filtered.join(F.broadcast(names), "metric", "left_semi")
-    return filtered.filter(F.col("metric").isin(list(metric_names)))
+  ) GROUP BY metric, b, timestamp
+) GROUP BY metric, b"""
+
+_EMPTY = ("SELECT CAST(NULL AS STRING) AS metric, CAST(NULL AS BIGINT) AS ts, "
+          "CAST(NULL AS DOUBLE) AS value WHERE false")
 
 
-def metric_series(spark: SparkSession, data: DataFrame, metric_names: list[str],
-                  start: int, end: int, step: int, function: str = "avg") -> DataFrame:
-    """One retention-function group: filter -> dedup -> bucket -> gap fill."""
-    filtered = filter_points(data, metric_names, start, end)
-    deduped = dedup_points(filtered)
-    bucketed = bucket_aggregate(deduped, step, function)
-    return gap_filled_series(spark, bucketed, metric_names, start, end, step)
+def metric_series(spark: SparkSession, data: DataFrame,
+                  groups: Sequence[SeriesGroup]) -> DataFrame:
+    """Gap-filled (metric, ts, value) rows for every group, one statement.
+
+    Each group yields exactly one row per requested name and grid step
+    ``start, start+step, ... < start + num_points*step``; a bucket with
+    no point, or whose aggregate is NaN, has a NULL value. ``start``
+    must sit on the step grid (snapped params always do). Names reach
+    the SQL only as bound parameters.
+    """
+    args: dict[str, str] = {}
+    branches = []
+    for function, names, params in groups:
+        try:
+            agg = _SQL_AGG[function]
+        except KeyError:
+            raise ValueError(f"unknown retention function {function!r}") from None
+        start, step = int(params.start_time_seconds), int(params.step_seconds)
+        if start % step:
+            raise ValueError(f"start {start} is not a multiple of step {step}")
+        if not names or params.num_points <= 0:
+            continue
+        keys = [f"n{len(args) + i}" for i in range(len(names))]
+        args.update(zip(keys, names))
+        last = start + (params.num_points - 1) * step
+        branches.append(_BRANCH.format(
+            agg=agg, names=", ".join(f":{k}" for k in keys), start=start,
+            step=step, last=last, stop=last + step))
+    if not branches:
+        return spark.sql(_EMPTY)
+    return spark.sql("\nUNION ALL\n".join(branches), args, data=data)
 
 
-def render_series(rows, params: MetricDataQueryParams, metric_names: list[str]) -> dict:
-    """Serialize bucketed (metric, ts, value) rows to the JSON contract.
+def render_series(rows, groups: Sequence[SeriesGroup]) -> dict:
+    """Serialize gap-filled (metric, ts, value) rows to the JSON contract.
 
     Parity with MetricDataRowCallbackHandler.java:37-105: every
-    requested metric gets a full [start, end) series on the step grid;
-    missing buckets and non-finite values are null; metrics with zero
-    rows still emit an all-null series.
+    requested metric gets a full [start, end) series on its group's
+    step grid; missing buckets and non-finite values are null; metrics
+    with zero rows still emit an all-null series. Each row is routed by
+    its metric to the params of the group that requested it.
     """
     result: dict[str, dict] = {}
-    for name in metric_names:
-        result[name] = {
-            "start": params.start_time_seconds,
-            "end": params.end_time_seconds,
-            "step": params.step_seconds,
-            "points": [None] * params.num_points,
-        }
+    route: dict[str, tuple[int, int, list]] = {}
+    for _, names, params in groups:
+        for name in names:
+            points = [None] * params.num_points
+            result[name] = {
+                "start": params.start_time_seconds,
+                "end": params.end_time_seconds,
+                "step": params.step_seconds,
+                "points": points,
+            }
+            route[name] = (params.start_time_seconds, params.step_seconds, points)
     for row in rows:
-        series = result.get(row["metric"])
-        if series is None:
+        target = route.get(row["metric"])
+        if target is None:
             continue
-        offset = row["ts"] - params.start_time_seconds
-        idx = offset // params.step_seconds
-        if offset < 0 or idx >= params.num_points:
+        start, step, points = target
+        offset = row["ts"] - start
+        idx = offset // step
+        if offset < 0 or idx >= len(points):
             continue
         v = row["value"]
         # Double.isFinite check in MetricDataRowCallbackHandler: NaN and
         # +/-Infinity both serialize as null (bare Infinity is not JSON).
-        series["points"][idx] = None if v is None or not math.isfinite(v) else v
+        points[idx] = None if v is None or not math.isfinite(v) else v
     return result
 
 
@@ -128,43 +182,45 @@ class MetricDataService:
         ``{name: {"start": s, "end": e, "step": st, "points": [v|None, ...]}}``
         (MetricDataRowCallbackHandler.java:96-105; consumed by
         graphouse.py:119-131). Metrics with no rows still emit full
-        null series; an empty metric list -> {}.
+        null series; an empty metric list -> {}. One statement, one
+        collect, whatever the number of retention groups.
         """
-        if not metric_names:
-            return {}
+        groups, data = self._read_plan(spark, data, metric_names, start, end,
+                                       now_seconds, params)
+        return render_series(metric_series(spark, data, groups).collect(), groups)
+
+    def _read_plan(self, spark: SparkSession, data: DataFrame,
+                   metric_names: list[str], start: int, end: int,
+                   now_seconds: int | None,
+                   params: MetricDataQueryParams | None = None,
+                   ) -> tuple[list[SeriesGroup], DataFrame]:
+        """Retention groups of a read, and the frame to scan for them."""
         # per-function grouping (MetricDataService.java:45-52); params are
         # derived PER GROUP from that group's retentions only
         # (MetricDataService.java:55-58), so a mixed-retention request
         # renders each group at its own step, not the global max.
-        groups: dict[str, list[str]] = defaultdict(list)
+        by_function: dict[str, list[str]] = defaultdict(list)
         for name in metric_names:
-            groups[self.provider.get_retention(name).function].append(name)
-        plan: list[tuple[str, list[str], MetricDataQueryParams]] = []
-        for fn, names in groups.items():
-            gparams = params if params is not None else self.query_params(
-                names, start, end, now_seconds
+            by_function[self.provider.get_retention(name).function].append(name)
+        groups = [
+            (fn, names, params if params is not None
+             else self.query_params(names, start, end, now_seconds))
+            for fn, names in by_function.items()
+        ]
+        if groups:
+            # zonemap prune (sources/skipping.py): swap the full-table
+            # scan for the index-surviving file list, using the WIDEST
+            # aligned range across groups so every group's predicate is
+            # a subset of what the pruned frame may contain. Falls back
+            # transparently (None) when no index is configured/built.
+            pruned = self._pruned_source(
+                spark, metric_names,
+                min(p.start_time_seconds for _, _, p in groups),
+                max(p.end_time_seconds for _, _, p in groups),
             )
-            plan.append((fn, names, gparams))
-        # zonemap prune (sources/skipping.py): swap the full-table scan
-        # for the index-surviving file list, using the WIDEST aligned
-        # range across groups so every group's predicate is a subset of
-        # what the pruned frame may contain. Falls back transparently
-        # (returns None) when no index is configured/built.
-        pruned = self._pruned_source(
-            spark, metric_names,
-            min(p.start_time_seconds for _, _, p in plan),
-            max(p.end_time_seconds for _, _, p in plan),
-        )
-        if pruned is not None:
-            data = pruned
-        result: dict[str, dict] = {}
-        for fn, names, gparams in plan:
-            frame = metric_series(
-                spark, data, names, gparams.start_time_seconds,
-                gparams.end_time_seconds, gparams.step_seconds, fn,
-            )
-            result.update(render_series(frame.collect(), gparams, names))
-        return result
+            if pruned is not None:
+                data = pruned
+        return groups, data
 
     def _pruned_source(self, spark: SparkSession, metric_names: list[str],
                        start: int, end: int) -> DataFrame | None:
@@ -177,42 +233,16 @@ class MetricDataService:
             spark, self.data_path, self.index_path, metric_names, start, end
         )
 
-    def get_data_json(self, *args, **kwargs) -> str:
-        return json.dumps(self.get_data(*args, **kwargs))
-
     def base_series(self, spark: SparkSession, data: DataFrame,
                     metric_names: list[str], start: int, end: int,
                     now_seconds: int | None = None) -> DataFrame:
         """Gap-filled canonical (metric, ts, value) frame — the base a
         render-function tree evaluates over (/render serving path).
 
-        Same per-retention-function grouping and zonemap pruning as
-        :meth:`get_data`, but the groups UNION into one frame instead
-        of serializing: graphite datapoints carry their own timestamps,
-        so mixed per-group steps coexist in a single result.
+        The same statement as :meth:`get_data`, left uncollected:
+        graphite datapoints carry their own timestamps, so mixed
+        per-group steps coexist in a single result.
         """
-        if not metric_names:
-            return spark.createDataFrame([], "metric string, ts long, value double")
-        groups: dict[str, list[str]] = defaultdict(list)
-        for name in metric_names:
-            groups[self.provider.get_retention(name).function].append(name)
-        plan = [
-            (fn, names, self.query_params(names, start, end, now_seconds))
-            for fn, names in groups.items()
-        ]
-        pruned = self._pruned_source(
-            spark, metric_names,
-            min(p.start_time_seconds for _, _, p in plan),
-            max(p.end_time_seconds for _, _, p in plan),
-        )
-        if pruned is not None:
-            data = pruned
-        frames = [
-            metric_series(spark, data, names, p.start_time_seconds,
-                          p.end_time_seconds, p.step_seconds, fn)
-            for fn, names, p in plan
-        ]
-        out = frames[0]
-        for f in frames[1:]:
-            out = out.unionByName(f)
-        return out
+        groups, data = self._read_plan(spark, data, metric_names, start, end,
+                                       now_seconds)
+        return metric_series(spark, data, groups)

@@ -235,6 +235,27 @@ def test_render_endpoint(server):
     assert code == 400
 
 
+def test_render_brace_glob_targets(server):
+    """A {a,b} brace group is one path: its comma lists alternatives,
+    it does not split the call's arguments."""
+    from graphouse_spark.functions.target import Call, Path, parse_target
+
+    assert parse_target("one_min.{srv1,srv2}.cpu") == Path("one_min.{srv1,srv2}.cpu")
+    assert parse_target("sumSeries(one_min.{srv1,srv2}.cpu)") == Call(
+        "sumSeries", [Path("one_min.{srv1,srv2}.cpu")])
+    svc, http, port = server
+    if not svc._loaded:
+        svc.load_tree()
+    raw = svc.render("one_min.{srv1,srv2}.cpu", BASE, BASE + 180)
+    assert [s["target"] for s in raw] == ["one_min.srv1.cpu", "one_min.srv2.cpu"]
+    tgt = urllib.parse.quote("sumSeries(one_min.{srv1,srv2}.cpu)")
+    code, body = get(port, f"/render?target={tgt}&from={BASE}&until={BASE + 180}")
+    assert code == 200
+    out = json.loads(body)
+    assert len(out) == 1
+    assert out[0]["datapoints"] == [[2.0, BASE], [4.0, BASE + 60], [6.0, BASE + 120]]
+
+
 def test_metrics_find_endpoint(server):
     """/metrics/find serves the graphite-web finder JSON directly."""
     svc, http, port = server

@@ -442,6 +442,22 @@ def test_aggregate_series_lists(spark):
     assert run("diff")[("diffSeries(a.x,b.x)", 0)] == 8.0
 
 
+def test_average_series_skips_gap_nulls(spark):
+    # a gap-filled null is no value: averageSeries(a=3, b=null) is 3.0,
+    # not 1.5, while countSeries still counts both series
+    from graphouse_spark.functions.timeseries import stddev_series
+
+    df = _mk(spark, [("g.a", 0, 3.0), ("g.b", 0, None),
+                     ("g.a", 60, 2.0), ("g.b", 60, 4.0),
+                     ("g.a", 120, None), ("g.b", 120, None)])
+    got = evaluate_target(df, "averageSeries(g.*)")
+    assert _points(got, "averageSeries") == {0: 3.0, 60: 3.0, 120: None}
+    stats = {r["ts"]: r for r in stddev_series(df).collect()}
+    assert stats[0]["stddev_value"] is None  # one non-null point
+    assert stats[60]["stddev_value"] == pytest.approx(math.sqrt(2.0))
+    assert [stats[t]["n_series"] for t in (0, 60, 120)] == [2, 2, 2]
+
+
 # ------------------------------------------------------------------ LTTB
 
 
